@@ -3,6 +3,26 @@
 All built-in column expressions — no Python UDFs in the hot path — so they
 stay inside whole-stage codegen and are exactly reproducible by a SQL
 oracle. Target table: ``documents(doc_id, text, lang, source, n_chars)``.
+
+Tokenizer contract: every Spark-side word split is ``split_words`` and
+every word n-gram is ``ngrams``.
+
+* Words split ``lower(trim(text))`` on ``WHITESPACE_RUN_PATTERN`` (an
+  explicit ASCII class, see its comment); a DuckDB twin replays it with
+  ``string_split_regex``. ``trim`` strips spaces only, so a leading
+  newline yields a leading empty token.
+* ``drop_empty`` is stated at each site and matches its oracle. Dropped:
+  ``word_count``, ``badword_fraction``, ``mean_words_per_line``,
+  packing, decontaminate, boilerplate, spans, dsir and the bigram LM.
+  Kept: ``stopword_ratio``, ``detect_language``, the repetition
+  signals, ``rolling_hash_fingerprint``, simhash, keyword/BM25 and
+  terms (the last two filter empties after the explode). ``lower=False``
+  only for ``word_count`` and ``packing.chunk_text``.
+* ``ngrams`` reads a word column that a prior ``select`` materialized:
+  Catalyst does not CSE into higher-order-function lambdas, so an inline
+  ``split_words`` re-tokenizes the text per gram, O(tokens²) per
+  document (22.8 s vs 2 s at sf0.1). The per-row scalars here that take
+  raw text (``top_bigram_fraction``) accept that cost.
 """
 
 from __future__ import annotations
@@ -14,9 +34,63 @@ from pyspark.sql import functions as F
 
 ColumnOrName = Union[Column, str]
 
+# explicit ASCII whitespace, NOT \s: Java's \s matches vertical tab
+# (\x0B) while RE2's does not, so \s-based twins diverge whenever the
+# control-strip stage is toggled off. (\v is also unusable: Java reads
+# it as the vertical-whitespace CLASS, RE2 as the single char.)
+WHITESPACE_RUN_PATTERN = r"[ \t\n\r\f\x0B]+"
+
 
 def _c(col: ColumnOrName) -> Column:
     return F.col(col) if isinstance(col, str) else col
+
+
+def split_words(
+    text: ColumnOrName, *, drop_empty: bool, lower: bool = True
+) -> Column:
+    """Whitespace words of ``text`` (see the module docstring for the
+    contract). NULL text gives NULL."""
+    t = F.trim(_c(text))
+    if lower:
+        t = F.lower(t)
+    words = F.split(t, WHITESPACE_RUN_PATTERN)
+    if drop_empty:
+        words = F.filter(words, lambda w: F.length(w) > 0)
+    return words
+
+
+def ngrams(words: ColumnOrName, n: int, *, distinct: bool = False) -> Column:
+    """Word n-grams of a word-array column, each joined with one space;
+    position i covers words[i..i+n-1]. Fewer than ``n`` words, or NULL,
+    give an empty array (guarded: Spark's ``sequence(1, 0)`` counts
+    down). ``distinct`` keeps first occurrences only."""
+    if n < 1:
+        raise ValueError(f"n must be >= 1: {n}")
+    w = _c(words)
+    empty = F.array().cast("array<string>")
+    if n == 1:
+        grams = F.coalesce(w, empty)
+    else:
+        # n element reads, not slice(w, i, n): no array per gram, ~25%
+        # cheaper at n=2 and 3 (sf0.1 documents, 4 cores)
+        grams = F.when(
+            F.size(w) >= n,
+            F.transform(
+                F.sequence(F.lit(1), F.size(w) - (n - 1)),
+                lambda i: F.concat_ws(
+                    " ", *[F.element_at(w, i + k) for k in range(n)]
+                ),
+            ),
+        ).otherwise(empty)
+    return F.array_distinct(grams) if distinct else grams
+
+
+def normalized_text(text: ColumnOrName) -> Column:
+    """Lowercase, trim, collapse whitespace runs to one space: the
+    normalization under both exact and near-duplicate keys."""
+    return F.regexp_replace(
+        F.lower(F.trim(_c(text))), WHITESPACE_RUN_PATTERN, " "
+    )
 
 
 def word_count(text: ColumnOrName) -> Column:
@@ -28,12 +102,7 @@ def word_count(text: ColumnOrName) -> Column:
     min_words curation gate, and counted 'a  b' as three (r11 review;
     the split-filter-size form measured ~15% cheaper than
     normalize-then-count-spaces)."""
-    return F.size(
-        F.filter(
-            F.split(F.trim(_c(text)), WHITESPACE_RUN_PATTERN),
-            lambda w: F.length(w) > 0,
-        )
-    )
+    return F.size(split_words(text, drop_empty=True, lower=False))
 
 
 def token_count(text: ColumnOrName) -> Column:
@@ -70,7 +139,7 @@ _STOPWORDS = (
 def stopword_ratio(text: ColumnOrName) -> Column:
     """Fraction of whitespace tokens that are English stopwords.
     Built-ins only: split → filter → size."""
-    toks = F.split(F.lower(F.trim(_c(text))), WHITESPACE_RUN_PATTERN)
+    toks = split_words(text, drop_empty=False)
     stop = F.size(
         F.filter(toks, lambda w: w.isin(list(_STOPWORDS)))
     )
@@ -100,7 +169,7 @@ def detect_language(text: ColumnOrName) -> Column:
     A real system would plug fastText here; the Spark plumbing (pure
     column expressions, no shuffle) is the deliverable.
     """
-    toks = F.split(F.lower(F.trim(_c(text))), WHITESPACE_RUN_PATTERN)
+    toks = split_words(text, drop_empty=False)
     markers = {
         "de": ("der", "die", "das", "und", "ist", "nicht", "ein", "zu"),
         "en": ("the", "and", "is", "of", "to", "in", "that", "it"),
@@ -130,8 +199,7 @@ def detect_language(text: ColumnOrName) -> Column:
 def doc_fingerprint(text: ColumnOrName) -> Column:
     """Content fingerprint: lowercase, collapse whitespace, md5.
     Identical in any SQL engine; used as the exact-dedup key."""
-    normalized = F.regexp_replace(F.lower(F.trim(_c(text))), WHITESPACE_RUN_PATTERN, " ")
-    return F.md5(normalized)
+    return F.md5(normalized_text(text))
 
 
 # Rolling-hash parameters: base ~2^20, Mersenne-31 modulus. Accumulator
@@ -147,7 +215,7 @@ def rolling_hash_fingerprint(text: ColumnOrName) -> Column:
     cross-engine reproducible: hash32 is the first 8 md5 hex digits, and
     any SQL engine can replay the fold (DuckDB: list_reduce).
     """
-    toks = F.split(F.lower(F.trim(_c(text))), WHITESPACE_RUN_PATTERN)
+    toks = split_words(text, drop_empty=False)
     tok_hash = lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast(  # noqa: E731
         "long"
     )
@@ -168,7 +236,7 @@ def rolling_hash_fingerprint(text: ColumnOrName) -> Column:
 def duplicate_word_fraction(text: ColumnOrName) -> Column:
     """Fraction of word occurrences that repeat an earlier word:
     1 - distinct_words / words. 0.0 for empty text."""
-    words = F.split(F.lower(F.trim(_c(text))), WHITESPACE_RUN_PATTERN)
+    words = split_words(text, drop_empty=False)
     n = F.size(words)
     return F.when(n <= 0, F.lit(0.0)).otherwise(
         (n - F.size(F.array_distinct(words))) / n.cast("double")
@@ -183,18 +251,12 @@ def top_bigram_fraction(text: ColumnOrName) -> Column:
     aggregate pass tracking the longest equal-run. The naive alternative
     (explode + groupBy + max) shuffles one row per bigram occurrence —
     at 100 TB that's the whole corpus through the wire for a per-row
-    scalar. Guarded for n < 2 words (sequence() would run backwards).
+    scalar. Texts with fewer than 2 words score 0.0.
     """
-    words = F.split(F.lower(F.trim(_c(text))), WHITESPACE_RUN_PATTERN)
+    words = split_words(text, drop_empty=False)
     n = F.size(words)
-    bigrams = F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.concat_ws(
-            " ", F.element_at(words, i), F.element_at(words, i + 1)
-        ),
-    )
     longest_run = F.aggregate(
-        F.array_sort(bigrams),
+        F.array_sort(ngrams(words, 2)),
         F.struct(
             F.lit("").alias("prev"),
             F.lit(0).cast("long").alias("run"),
@@ -347,13 +409,6 @@ def compression_ratio(text: ColumnOrName, level: int = 6) -> Column:
 # C0 controls except \t \n \r, then DEL + C1 controls. Both engines'
 # regex dialects accept this class verbatim.
 CONTROL_CHAR_PATTERN = r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F-\x9F]"
-
-# explicit ASCII whitespace, NOT \s: Java's \s matches vertical tab
-# (\x0B) while RE2's does not, so \s-based twins diverge whenever the
-# control-strip stage is toggled off. (\v is also unusable: Java reads
-# it as the vertical-whitespace CLASS, RE2 as the single char.)
-WHITESPACE_RUN_PATTERN = r"[ \t\n\r\f\x0B]+"
-
 
 def unicode_normalize(text: ColumnOrName, form: str = "NFC") -> Column:
     """Unicode normalization, Arrow-batched ``unicodedata.normalize``;
@@ -528,11 +583,7 @@ def mean_words_per_line(text: ColumnOrName) -> Column:
         lines,
         F.lit(0).cast("long"),
         lambda a, l: a
-        + F.size(
-            F.filter(
-                F.split(l, WHITESPACE_RUN_PATTERN), lambda w: w != ""
-            )
-        ),
+        + F.size(split_words(l, drop_empty=True, lower=False)),
     )
     return F.when(n <= 0, F.lit(0.0)).otherwise(words / n.cast("double"))
 
@@ -702,10 +753,7 @@ def badword_fraction(
     if not blocklist:
         raise ValueError("blocklist must be non-empty")
     terms = [str(w).lower() for w in blocklist]
-    toks = F.filter(
-        F.split(F.lower(F.trim(_c(text))), WHITESPACE_RUN_PATTERN),
-        lambda w: w != "",
-    )
+    toks = split_words(text, drop_empty=True)
     n = F.size(toks)
     hits = F.size(F.filter(toks, lambda w: w.isin(terms)))
     return F.when(n <= 0, F.lit(0.0)).otherwise(hits / n.cast("double"))

@@ -28,9 +28,9 @@ Scale shapes (the parts that must survive 100 TB):
   explodes the set, Spark's broadcast-size guard fails loudly rather
   than silently spilling.
 
-Tokenization matches ``operators/decontaminate.py`` / ``terms.py``
-(lowercase, trim, split on whitespace) so profiles compose across the
-text operators.
+Words are ``functions.text.split_words(drop_empty=True)`` and grams
+``functions.text.ngrams`` (the tokenizer contract is in that module's
+docstring), so profiles compose across the text operators.
 """
 
 from __future__ import annotations
@@ -38,20 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import ngrams, split_words
 from ..parallel import widen
-from .decontaminate import _ngrams_of, _words
-
-
-def _position_grams(words: Column, n: int) -> Column:
-    """Space-joined n-gram at every position (non-distinct): position i
-    covers words[i..i+n-1]. Short documents yield an empty array."""
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(words) - (n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(words, i, n)),
-    )
-    return F.when(F.size(words) >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
 
 
 def frequent_ngrams(
@@ -75,16 +63,13 @@ def frequent_ngrams(
     # gram counts — unlike the span operators below, whose per-byte
     # work (position windows, run chains) pays for the shuffle at
     # every scale. On low-split inputs these passes stay scan-bound.
-    # materialize the word array BEFORE the n-gram lambda references it:
-    # Catalyst does not CSE into higher-order-function lambdas, so an
-    # inlined _words() re-tokenizes the text per gram position —
-    # O(tokens²) per doc (see decontaminate._ngrams_of, measured 22.8s
-    # vs 2s at sf0.1)
+    # materialize the word array BEFORE the n-gram lambda references it
+    # (the attribute-column rule in functions.text)
     grams = documents.select(
-        F.col(id_col), _words(text_col).alias("__w")
+        F.col(id_col), split_words(text_col, drop_empty=True).alias("__w")
     ).select(
         F.col(id_col),
-        F.explode(_ngrams_of(F.col("__w"), n)).alias("ngram"),
+        F.explode(ngrams("__w", n, distinct=True)).alias("ngram"),
     )
     counts = grams.groupBy("ngram").agg(
         F.count(F.col(id_col)).alias("df")
@@ -114,9 +99,7 @@ def _position_frame(documents, id_col, units: Column, k: int):
         documents.select(F.col(id_col), units.alias("__u"))
         .select(
             F.col(id_col),
-            F.posexplode_outer(
-                _position_grams(F.col("__u"), k)
-            ).alias("pos", "ngram"),
+            F.posexplode_outer(ngrams("__u", k)).alias("pos", "ngram"),
         )
         .where(F.col("ngram").isNotNull())
     )
@@ -196,7 +179,8 @@ def duplicated_spans(
     from pyspark.sql import Window
 
     documents = widen(documents, id_col)  # see frequent_ngrams
-    pos = _position_frame(documents, id_col, _words(text_col), k)
+    words = split_words(text_col, drop_empty=True)
+    pos = _position_frame(documents, id_col, words, k)
     repeated = (
         pos.select(id_col, "ngram")
         .distinct()
@@ -224,7 +208,7 @@ def duplicated_spans(
     base = documents.select(
         F.col(id_col),
         F.greatest(
-            F.lit(0), F.size(_words(text_col)) - (k - 1)
+            F.lit(0), F.size(words) - (k - 1)
         ).cast("long").alias("n_positions"),
     )
     return base.join(runs, id_col, "left").select(
@@ -275,7 +259,8 @@ def remove_duplicated_spans(
     if k < 1:
         raise ValueError(f"k must be >= 1: {k}")
     documents = widen(documents, id_col)  # see frequent_ngrams
-    pos = _position_frame(documents, id_col, _words(text_col), k)
+    words = split_words(text_col, drop_empty=True)
+    pos = _position_frame(documents, id_col, words, k)
     repeated = (
         pos.select(id_col, "ngram")
         .distinct()
@@ -290,7 +275,7 @@ def remove_duplicated_spans(
         .agg(F.sort_array(F.collect_set("pos")).alias("__hits"))
     )
     return _strip_by_hits(
-        documents, hit_arrays, id_col, _words(text_col), k,
+        documents, hit_arrays, id_col, words, k,
         out_col, "n_removed_words",
     )
 
@@ -317,18 +302,17 @@ def boilerplate_profile(
     # and needs no separate distinct-gram array build. The decisive
     # cost fix, though, is materializing the word array as an attribute
     # column before the gram lambda references it (see frequent_ngrams
-    # above): the previous inlined-_words shape re-tokenized per
+    # above): the previous inlined-tokenizer shape re-tokenized per
     # position — O(tokens²), the r4 suite's tallest pole at ~9s warm /
     # sf0.1; this shape runs 0.5s warm.
     per_doc = (
         documents.select(
-            F.col(id_col), _words(text_col).alias("__w")
+            F.col(id_col),
+            split_words(text_col, drop_empty=True).alias("__w"),
         )
         .select(
             F.col(id_col),
-            F.explode_outer(
-                _position_grams(F.col("__w"), n)
-            ).alias("ngram"),
+            F.explode_outer(ngrams("__w", n)).alias("ngram"),
         )
         .where(F.col("ngram").isNotNull())
         .groupBy(id_col, "ngram")
@@ -355,7 +339,8 @@ def boilerplate_profile(
     base = documents.select(
         F.col(id_col),
         F.greatest(
-            F.lit(0), F.size(_words(text_col)) - (n - 1)
+            F.lit(0),
+            F.size(split_words(text_col, drop_empty=True)) - (n - 1),
         ).cast("long").alias("n_positions"),
     )
     return (

@@ -18,9 +18,9 @@ Scale shape — **zero corpus-scale shuffles**:
   ``xxhash64`` values instead of n-gram strings (~10× smaller; collision
   false-positive odds ~n²/2^64 — acceptable for a removal gate).
 
-Normalization matches ``operators/terms.py`` (lowercase, trim, split on
-whitespace runs, drop empty tokens) so the q48 DuckDB oracle reproduces
-the n-grams exactly.
+Words are ``functions.text.split_words(drop_empty=True)`` and grams
+``ngrams(distinct=True)`` (the tokenizer contract is in that module's
+docstring), so the q48 DuckDB oracle reproduces the n-grams exactly.
 """
 
 from __future__ import annotations
@@ -30,46 +30,15 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import WHITESPACE_RUN_PATTERN as WS_RUN
-
-
-def _words(text_col: str) -> Column:
-    return F.filter(
-        F.split(F.lower(F.trim(F.col(text_col))), WS_RUN),
-        lambda w: F.length(w) > 0,
-    )
-
-
-def _ngrams_of(words: Column, n: int) -> Column:
-    """Distinct space-joined n-grams of an already-computed word array.
-    Documents shorter than n words yield an empty array (Spark's
-    ``sequence(1, 0)`` counts *down*, so the short side must be guarded
-    explicitly — DuckDB's ``generate_series(1, 0)`` is empty).
-
-    ``words`` should be an *attribute column* in any corpus-scale plan:
-    the lambda references it once per element, and Catalyst does not CSE
-    into higher-order-function lambdas — an inlined split-words
-    expression re-tokenizes the text per n-gram (O(tokens²) per doc,
-    measured 22.8 s vs 2 s at sf0.1)."""
-    if n < 1:
-        raise ValueError(f"n must be >= 1: {n}")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(words) - (n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(words, i, n)),
-    )
-    return F.array_distinct(
-        F.when(F.size(words) >= n, grams).otherwise(
-            F.array().cast("array<string>")
-        )
-    )
+from ..functions.text import ngrams, split_words
 
 
 def word_ngrams(text_col: str, n: int) -> Column:
     """Array of distinct word n-grams straight from a text column — for
     expression contexts and small inputs. Corpus-scale callers go
     through ``ngram_contamination``, which materializes the word array
-    first (see ``_ngrams_of``)."""
-    return _ngrams_of(_words(text_col), n)
+    first (see ``functions.text``)."""
+    return ngrams(split_words(text_col, drop_empty=True), n, distinct=True)
 
 
 def _grams_table(
@@ -77,9 +46,11 @@ def _grams_table(
 ):
     """(keep..., _grams) with the word array materialized as an
     attribute column between tokenization and gram-building."""
-    words = df.select(*keep, _words(text_col).alias("_w"))
+    words = df.select(
+        *keep, split_words(text_col, drop_empty=True).alias("_w")
+    )
     return words.select(
-        *keep, _ngrams_of(F.col("_w"), n).alias("_grams")
+        *keep, ngrams("_w", n, distinct=True).alias("_grams")
     )
 
 

@@ -24,10 +24,10 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import WHITESPACE_RUN_PATTERN as WS_RUN
-from ..functions.text import doc_fingerprint
+from ..functions.text import doc_fingerprint, normalized_text, split_words
 from ..functions.vector import cosine_similarity, dot_product, l2_norm
 from ..parallel import widen
+from ..plans.pushdown import MAX_ISIN_LITERALS, isin_or_semi_join
 
 
 # ---------------------------------------------------------------------------
@@ -107,11 +107,6 @@ def exact_dup_groups(
 # ---------------------------------------------------------------------------
 # Shingling + MinHash
 # ---------------------------------------------------------------------------
-
-
-def normalized_text(text: Column) -> Column:
-    """Dedup normalization: lowercase, trim, collapse whitespace."""
-    return F.regexp_replace(F.lower(F.trim(text)), WS_RUN, " ")
 
 
 def char_shingles(text: Column, k: int = 5) -> Column:
@@ -609,9 +604,7 @@ def simhash64(
     ~0.1 s at sf0.01.
     """
     df = widen(df, id_col)
-    toks = F.array_distinct(
-        F.split(F.lower(F.trim(F.col(text_col))), WS_RUN)
-    )
+    toks = F.array_distinct(split_words(text_col, drop_empty=False))
     if hash_fn == "md5":
         return df.select(
             F.col(id_col), _simhash_md5_udf()(toks).alias("simhash")
@@ -960,7 +953,7 @@ def minhash_index_neardup(
     threshold: float = 0.7,
     text_col: str = "text",
     batch_id_col: str = "batch_id",
-    max_literal_keys: int = 1000,
+    max_literal_keys: int = MAX_ISIN_LITERALS,
     persist_batch: bool = True,
     _persisted: Optional[list] = None,
 ) -> DataFrame:
@@ -1013,13 +1006,14 @@ def minhash_index_neardup(
     distinct_keys = [r.bb for r in bkeys.select("bb").distinct().limit(
         max_literal_keys + 1
     ).collect()]
-    if len(distinct_keys) <= max_literal_keys:
-        # literal IN pushes into the bb-sorted scan (row-group skipping)
-        index_hits = index_bands.where(F.col("bb").isin(distinct_keys))
-    else:
-        index_hits = index_bands.join(
-            F.broadcast(bkeys.select("bb").distinct()), "bb", "left_semi"
-        )
+    # a literal IN pushes into the bb-sorted scan (row-group skipping)
+    index_hits = isin_or_semi_join(
+        index_bands,
+        "bb",
+        distinct_keys,
+        bkeys.select("bb").distinct(),
+        max_literal_keys,
+    )
     pairs = (
         bkeys.join(
             index_hits.withColumnRenamed(id_col, "index_id"), "bb"

@@ -37,26 +37,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Words and grams follow the tokenizer contract in functions/text.py; its
+# explicit whitespace class is what the SQL twin and the streaming
+# dsir_score kernel split on too.
+from ..functions.text import WHITESPACE_RUN_PATTERN as _WS_RUN
+from ..functions.text import ngrams, split_words
+from ..parallel import widen
+
 _TWO_52 = float(1 << 52)
-
-
-#: Explicit whitespace-run class shared by BOTH twins: Java ``\s``
-#: matches vertical tab (\x0B) but RE2's (DuckDB) does not, so a bare
-#: ``\s+`` tokenizes \x0B-bearing documents differently across engines
-#: — changing bucket counts, weights, and potentially the Gumbel
-#: keep-set. Same convention as functions/text.py
-#: WHITESPACE_RUN_PATTERN and the streaming dsir_score kernel.
-from ..functions.text import WHITESPACE_RUN_PATTERN as _WS_RUN  # noqa: E402
-from ..parallel import widen  # noqa: E402
-
-
-def _tokens(text_col: str) -> "F.Column":
-    """The repo-canonical tokenizer shape (keyword.py): lower, trim,
-    whitespace split — with the explicit engine-portable class."""
-    return F.filter(
-        F.split(F.lower(F.trim(F.col(text_col))), _WS_RUN),
-        lambda t: t != "",
-    )
 
 
 def _check_n(n: int) -> None:
@@ -64,21 +52,19 @@ def _check_n(n: int) -> None:
         raise ValueError(f"n must be in [1, 8], got {n}")
 
 
-def _ngrams(toks: "F.Column", n: int) -> "F.Column":
-    """Adjacent word n-grams joined by a single space (n=1 → tokens)."""
+def _exploded_grams(df: DataFrame, text_col: str, n: int, *keep: str):
+    """(keep..., __g): one row per word n-gram. The word array is an
+    attribute column before the gram lambda reads it."""
     _check_n(n)
-    if n == 1:
-        return toks
-    out = F.slice(toks, 1, F.greatest(F.size(toks) - (n - 1), F.lit(0)))
-    for i in range(1, n):
-        nxt = F.slice(toks, i + 1, F.greatest(F.size(toks) - i, F.lit(0)))
-        out = F.zip_with(out, nxt, lambda a, b: F.concat_ws(" ", a, b))
-        # zip_with pads the longer side with nulls; the first slice is
-        # the shortest, so re-truncate to its length
-        out = F.slice(
-            out, 1, F.greatest(F.size(toks) - (n - 1), F.lit(0))
-        )
-    return out
+    words = df.select(
+        *keep, split_words(text_col, drop_empty=True).alias("__w")
+    )
+    # explode_outer + null filter: plain explode lets
+    # InferFiltersFromGenerate push a size() filter with the whole gram
+    # build inlined below the select
+    return words.select(
+        *keep, F.explode_outer(ngrams("__w", n)).alias("__g")
+    ).where(F.col("__g").isNotNull())
 
 
 def _bucket(gram: "F.Column", n_buckets: int) -> "F.Column":
@@ -102,10 +88,7 @@ def doc_bucket_counts(
     Map-only until the (id, bucket) partial aggregate; rows out are
     bounded by distinct buckets per document.
     """
-    grams = df.select(
-        F.col(id_col),
-        F.explode(_ngrams(_tokens(text_col), n)).alias("__g"),
-    )
+    grams = _exploded_grams(df, text_col, n, id_col)
     return (
         grams.select(
             F.col(id_col), _bucket(F.col("__g"), n_buckets).alias("bucket")
@@ -118,7 +101,7 @@ def doc_bucket_counts(
 def _corpus_bucket_counts(
     df: DataFrame, text_col: str, n: int, n_buckets: int, out: str
 ) -> DataFrame:
-    grams = df.select(F.explode(_ngrams(_tokens(text_col), n)).alias("__g"))
+    grams = _exploded_grams(df, text_col, n)
     return (
         grams.select(_bucket(F.col("__g"), n_buckets).alias("bucket"))
         .groupBy("bucket")
@@ -222,7 +205,8 @@ def dsir_weights(
     # single-row-group parquet file serializes the whole pass (sf1
     # probe: 17 s on one task, core count irrelevant). widen() is a
     # no-op whenever the scan already splits enough (guide §2.5).
-    raw_docs = widen(raw_docs)
+    raw_docs = widen(raw_docs, id_col)
+    # target_docs carries no id column: round-robin is the only option
     target_docs = widen(target_docs)
     per_doc = doc_bucket_counts(raw_docs, id_col, text_col, n, n_buckets)
     raw_c = per_doc.groupBy("bucket").agg(F.sum("cnt").alias("c_r"))
@@ -235,10 +219,12 @@ def dsir_weights(
     # would shuffle the whole corpus on id just for this backfill; a
     # second MAP-ONLY pass selecting the (rare) gram-less docs unions
     # in instead — no corpus shuffle anywhere in the weight plan.
-    # coalesce: size() is NULL for NULL text, which must land in the
-    # weight-0 branch too (the SQL twin's LEFT JOIN already does)
+    # A doc has no n-grams iff it has fewer than n words. coalesce:
+    # size() is NULL for NULL text, which must land in the weight-0
+    # branch too (the SQL twin's LEFT JOIN already does)
     empty = raw_docs.where(
-        F.coalesce(F.size(_ngrams(_tokens(text_col), n)), F.lit(0)) == 0
+        F.coalesce(F.size(split_words(text_col, drop_empty=True)), F.lit(0))
+        < n
     ).select(F.col(id_col), F.lit(0.0).alias("log_weight"))
     return scored.select(id_col, "log_weight").unionByName(empty)
 

@@ -1189,7 +1189,15 @@ def _dc_scan(
                         )
                     size = reader.huff(dc_tab)
                     preds[cid] += _extend(reader.bits(size), size)
-                    coefs[cid][by, bx, 0] = preds[cid] << al
+                    dc = preds[cid] << al
+                    # a corrupt DC table can walk the predictor past
+                    # int32; numpy would wrap it (numpy 2: raise
+                    # OverflowError) instead of refusing the stream
+                    if not -(1 << 31) <= dc < (1 << 31):
+                        raise UnsupportedMediaError(
+                            "progressive DC coefficient out of range"
+                        )
+                    coefs[cid][by, bx, 0] = dc
                 else:
                     if reader.bit():
                         coefs[cid][by, bx, 0] |= 1 << al

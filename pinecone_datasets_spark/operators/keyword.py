@@ -37,27 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import WHITESPACE_RUN_PATTERN as WS_RUN
-
-
-def _tokens(text_col: str) -> "F.Column":
-    return F.split(F.lower(F.trim(F.col(text_col))), WS_RUN)
-
-
-_MAX_ISIN_LITERALS = 1000
-
-
-def _filtered_postings(postings, col, values, values_df):
-    """``postings WHERE col IN values`` — literal ``isin`` (pushed into
-    the parquet scan, row-group skipping on the term-sorted layout)
-    while the list is small; broadcast LEFT SEMI join on ``values_df``
-    once the list would bloat the Catalyst plan. (Lives here rather
-    than prf.py since r11: bm25_index_topk shares it — its literal IN
-    was previously unbounded, so a 10k-query batch produced tens of
-    thousands of literals and blew up analysis/codegen time.)"""
-    if len(values) <= _MAX_ISIN_LITERALS:
-        return postings.where(F.col(col).isin(values))
-    return postings.join(F.broadcast(values_df), col, "left_semi")
+from ..functions.text import split_words
+from ..plans.pushdown import isin_or_semi_join
 
 
 def _tf_frames(docs: DataFrame, id_col: str, text_col: str):
@@ -72,7 +53,8 @@ def _tf_frames(docs: DataFrame, id_col: str, text_col: str):
     # under-split input (one small parquet file) would run it serially.
     docs = widen(docs, id_col)
     toks = docs.select(
-        F.col(id_col), F.explode(_tokens(text_col)).alias("term")
+        F.col(id_col),
+        F.explode(split_words(text_col, drop_empty=False)).alias("term"),
     ).where(F.col("term") != "")
     tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     dl = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
@@ -145,11 +127,9 @@ def bm25_topk(
     at the edge if hashing), rank is deterministic via rounded-score +
     id tiebreak."""
     tf, dl, stats = _tf_frames(docs, id_col, text_col)
+    qwords = split_words(query_text_col, drop_empty=False)
     qterms = (
-        queries.select(
-            F.col(query_id_col),
-            F.explode(_tokens(query_text_col)).alias("term"),
-        )
+        queries.select(F.col(query_id_col), F.explode(qwords).alias("term"))
         .where(F.col("term") != "")
         .distinct()
     )
@@ -330,16 +310,14 @@ def bm25_index_topk(
     id_col = meta["id_col"]
     n_docs, avgdl = float(meta["n_docs"]), float(meta["avgdl"])
 
+    qwords = split_words(query_text_col, drop_empty=False)
     qterms = (
-        queries.select(
-            F.col(query_id_col),
-            F.explode(_tokens(query_text_col)).alias("term"),
-        )
+        queries.select(F.col(query_id_col), F.explode(qwords).alias("term"))
         .where(F.col("term") != "")
         .distinct()
     )
     term_list = [r["term"] for r in qterms.select("term").distinct().collect()]
-    postings = _filtered_postings(
+    postings = isin_or_semi_join(
         spark.read.parquet(path),
         "term",
         term_list,

@@ -44,7 +44,8 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import WHITESPACE_RUN_PATTERN as WS_RUN
+from ..functions.text import split_words
+from ..parallel import shuffle_partitions
 
 
 def whitespace_token_count(text_col: str) -> Column:
@@ -55,12 +56,7 @@ def whitespace_token_count(text_col: str) -> Column:
     rows with NULL global_start/chunk_id the loader cannot place, and
     silently mis-bucketed in length_bucketed_batches (r11 review)."""
     return F.coalesce(
-        F.size(
-            F.filter(
-                F.split(F.lower(F.trim(F.col(text_col))), WS_RUN),
-                lambda w: F.length(w) > 0,
-            )
-        ).cast("long"),
+        F.size(split_words(text_col, drop_empty=True)).cast("long"),
         F.lit(0).cast("long"),
     )
 
@@ -101,9 +97,7 @@ def pack_documents(
         F.col(id_col), F.col(order).alias("_ord"), tokens.alias("n_tokens")
     )
     if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
+        num_partitions = shuffle_partitions(df.sparkSession)
     ranged = (
         base.repartitionByRange(num_partitions, F.col("_ord"), F.col(id_col))
         .sortWithinPartitions("_ord", id_col)
@@ -207,9 +201,7 @@ def length_bucketed_batches(
         F.col(id_col), tokens.alias("n_tokens")
     ).withColumn("bucket", bucket)
     if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
+        num_partitions = shuffle_partitions(df.sparkSession)
     ranged = (
         base.repartitionByRange(
             num_partitions, "bucket", "n_tokens", id_col
@@ -280,10 +272,7 @@ def chunk_text(
     # — the old F.lower here silently lowercased every served chunk
     # (r10 review). Whitespace runs still collapse to single spaces
     # (the join separator), which IS disclosed below.
-    words = F.filter(
-        F.split(F.trim(F.col(text_col)), WS_RUN),
-        lambda w: F.length(w) > 0,
-    )
+    words = split_words(text_col, drop_empty=True, lower=False)
     # chunk starts: 0, stride, 2*stride, ... while start < n_tokens
     starts = (
         f"transform(sequence(0, greatest(CAST(ceil((size(__w) - 1) /"

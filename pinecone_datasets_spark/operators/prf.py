@@ -36,17 +36,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .keyword import (
-    _bm25_scores,
-    _filtered_postings,
-    _tf_frames,
-    _tokens,
-)
+from ..functions.text import split_words
+from ..plans.pushdown import isin_or_semi_join
+from .keyword import _bm25_scores, _tf_frames
 
-# Above this many values, a literal IN list stops being a cheap pushed
-# scan filter and starts bloating the Catalyst plan (large query sets:
-# Q·fb_k ids / Q·n_terms terms). Past it, filter via a broadcast
-# semi-join instead — no pushdown, but plan size stays O(1).
+
 def _validate_rm3(fb_k: int, n_terms: int, orig_weight: float) -> None:
     """Shared by all three RM3 entry points: out-of-range parameters
     (e.g. orig_weight=1.5) would otherwise produce silently-wrong
@@ -109,10 +103,9 @@ def _rm3_model_from_frames(
     materialize_feedback: bool = True,
 ) -> DataFrame:
     qid = query_id_col
+    qwords = split_words(query_text_col, drop_empty=False)
     qterms = (
-        queries.select(
-            F.col(qid), F.explode(_tokens(query_text_col)).alias("term")
-        )
+        queries.select(F.col(qid), F.explode(qwords).alias("term"))
         .where(F.col("term") != "")
         .distinct()
     )
@@ -184,10 +177,9 @@ def _interpolate_model(
         "term",
         F.round(F.col("_w") / F.sum("_w").over(wq), 12).alias("_pwr"),
     )
+    qwords = split_words(query_text_col, drop_empty=False)
     orig = (
-        queries.select(
-            F.col(qid), F.explode(_tokens(query_text_col)).alias("term")
-        )
+        queries.select(F.col(qid), F.explode(qwords).alias("term"))
         .where(F.col("term") != "")
         .groupBy(qid, "term")
         .agg(F.count(F.lit(1)).alias("_cnt"))
@@ -398,7 +390,7 @@ def rm3_index_search(
         return spark.createDataFrame([], fb.schema)
     pdq = spark.createDataFrame(pdq_rows, pdq_frame.schema)
     fb_ids = sorted({r[id_col] for r in pdq_rows})
-    postings_fb = _filtered_postings(
+    postings_fb = isin_or_semi_join(
         spark.read.parquet(path), id_col, fb_ids,
         pdq.select(id_col).distinct(),
     ).select(id_col, "term", "tf", "dl")
@@ -420,7 +412,7 @@ def rm3_index_search(
     model = spark.createDataFrame(model_rows, model.schema)
     term_list = sorted({r["term"] for r in model_rows})
     n_docs, avgdl = float(meta["n_docs"]), float(meta["avgdl"])
-    postings = _filtered_postings(
+    postings = isin_or_semi_join(
         spark.read.parquet(path), "term", term_list,
         model.select("term").distinct(),
     )

@@ -51,6 +51,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..parallel import shuffle_partitions
 from .rproject import project_vectors
 
 
@@ -194,9 +195,7 @@ def semantic_dedup_pairs(
     # 12 partitions on 32 cores). An explicit keyed repartition is
     # exempt from AQE coalescing; the count tracks the cluster-sized
     # spark.sql.shuffle.partitions, not a local constant.
-    n_shuffle = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
+    n_shuffle = shuffle_partitions(df.sparkSession)
     cells = cells.repartition(n_shuffle, cell_col)
     a = cells.select(
         F.col(id_col).alias("id_a"),

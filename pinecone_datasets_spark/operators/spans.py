@@ -59,9 +59,9 @@ Scale shapes (the parts that must survive 100 TB):
   functions (``filter`` with index + ``concat_ws``) — map-only, no
   Python crossing.
 
-Tokenization matches ``operators/decontaminate.py`` / ``terms.py``
-(lowercase, trim, split on whitespace runs, drop empties) so the DuckDB
-oracle replays every window bit-for-bit via the md5 hash path;
+Words are ``functions.text.split_words(drop_empty=True)`` (the
+tokenizer contract is in that module's docstring), so the DuckDB oracle
+replays every window bit-for-bit via the md5 hash path;
 ``hash_fn="xxhash64"`` is the cheaper JVM-only production path.
 """
 
@@ -70,7 +70,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .decontaminate import _words
+from ..functions.text import split_words
 
 
 def _position_window_hashes(
@@ -93,7 +93,9 @@ def _position_window_hashes(
     # The per-position explode multiplies rows ~|tokens|-fold: an
     # under-split input (one small parquet file) would run it serially.
     df = widen(df, id_col)
-    words = df.select(F.col(id_col), _words(text_col).alias("_w"))
+    words = df.select(
+        F.col(id_col), split_words(text_col, drop_empty=True).alias("_w")
+    )
 
     def whash(i: Column) -> Column:
         gram = F.concat_ws(" ", F.slice(F.col("_w"), i, window))
@@ -233,7 +235,7 @@ def strip_repeated_spans(
     words = df.select(
         *passthrough,
         F.col(text_col).alias("_orig"),
-        _words(text_col).alias("_w"),
+        split_words(text_col, drop_empty=True).alias("_w"),
     )
     joined = words.join(per_doc, id_col, "left")
     covered = lambda i: F.exists(  # noqa: E731 — 1-based position i

@@ -20,13 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import WHITESPACE_RUN_PATTERN as WS_RUN
-
+from ..functions.text import ngrams, split_words
 from ..parallel import widen
-
-
-def _words(text_col: str) -> F.Column:
-    return F.split(F.lower(F.trim(F.col(text_col))), WS_RUN)
 
 
 def top_terms(
@@ -36,12 +31,13 @@ def top_terms(
 ) -> DataFrame:
     """Global top-k terms by total occurrence count (ties broken by term
     so the result is deterministic)."""
+    words = split_words(text_col, drop_empty=False)
     return (
         # outer: InferFiltersFromGenerate would re-tokenize per row in a
         # pushed-down filter (rule skips outer generates); the existing
         # length>0 predicate already drops the null placeholder rows.
         widen(df, text_col)
-        .select(F.explode_outer(_words(text_col)).alias("term"))
+        .select(F.explode_outer(words).alias("term"))
         .where(F.length("term") > 0)
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -64,8 +60,9 @@ def tf_idf(
     """
     # outer explode: see top_terms on InferFiltersFromGenerate; the
     # length predicate drops the null placeholder rows.
+    words = split_words(text_col, drop_empty=False)
     exploded = widen(df, id_col).select(
-        F.col(id_col), F.explode_outer(_words(text_col)).alias("term")
+        F.col(id_col), F.explode_outer(words).alias("term")
     ).where(F.length("term") > 0)
     term_counts = exploded.groupBy(id_col, "term").agg(
         F.count(F.lit(1)).alias("tf")
@@ -120,8 +117,9 @@ def unigram_logprob(
     exploded-tokens ⋈ vocabulary — vocabulary-sized build side,
     broadcast when it fits (AQE decides), shuffled hash join otherwise.
     """
+    words = split_words(text_col, drop_empty=False)
     exploded = widen(df, id_col).select(
-        F.col(id_col), F.explode_outer(_words(text_col)).alias("term")
+        F.col(id_col), F.explode_outer(words).alias("term")
     ).where(F.length("term") > 0)
     vocab = exploded.groupBy("term").agg(F.count(F.lit(1)).alias("n"))
     total = vocab.agg(F.sum("n").alias("total"))
@@ -169,25 +167,13 @@ def bigram_logprob(
     """
     if not 0.0 < lam <= 1.0:
         raise ValueError(f"lam must be in (0, 1]: {lam}")
-    # Column API, not an expr string: embedding the explicit whitespace
-    # class into a Spark-SQL literal would re-enter escape-dialect
-    # territory (\x0B is not a recognized SQL-literal escape)
-    toks_col = F.filter(
-        F.split(F.lower(F.trim(F.col(text_col))), WS_RUN),
-        lambda t: F.length(t) > 0,
-    )
-    bigram_arr = (
-        "CASE WHEN size(__toks) >= 2 THEN"
-        " transform(sequence(2, size(__toks)),"
-        " i -> concat(element_at(__toks, i - 1), ' ',"
-        " element_at(__toks, i)))"
-        " ELSE CAST(array() AS ARRAY<STRING>) END"
-    )
     stream = (
-        df.select(F.col(id_col), toks_col.alias("__toks"))
-        .select(
+        df.select(
             F.col(id_col),
-            F.explode_outer(F.expr(bigram_arr)).alias("bg"),
+            split_words(text_col, drop_empty=True).alias("__toks"),
+        )
+        .select(
+            F.col(id_col), F.explode_outer(ngrams("__toks", 2)).alias("bg")
         )
         .where(F.col("bg").isNotNull())
     )
@@ -195,8 +181,9 @@ def bigram_logprob(
     ctx = bi_vocab.select(
         F.substring_index("bg", " ", 1).alias("w1"), "n_bi"
     ).groupBy("w1").agg(F.sum("n_bi").alias("n_ctx"))
+    words = split_words(text_col, drop_empty=False)
     uni_stream = df.select(
-        F.col(id_col), F.explode_outer(_words(text_col)).alias("term")
+        F.col(id_col), F.explode_outer(words).alias("term")
     ).where(F.length("term") > 0)
     uni_vocab = uni_stream.groupBy("term").agg(
         F.count(F.lit(1)).alias("n_uni")

@@ -78,6 +78,16 @@ def _parse_bytes(v: str) -> int:
         return 128 * 1024 * 1024  # unparseable: Spark's default
 
 
+def shuffle_partitions(spark) -> int:
+    """``spark.sql.shuffle.partitions`` as an int; some platforms set it
+    to a non-integer such as ``auto``, which falls back to
+    ``defaultParallelism``."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        return spark.sparkContext.defaultParallelism
+
+
 def _scan_splits_at_least(df: DataFrame, target: int) -> bool:
     """Driver-metadata-only lower bound: True if the frame is a scan of
     local files whose byte size guarantees >= ``target`` input splits.
@@ -161,6 +171,12 @@ def concurrent_actions(spark, fns, description: str) -> None:
     from pyspark import inheritable_thread_target
 
     sc = spark.sparkContext
+    props = (
+        "spark.jobGroup.id",
+        "spark.job.description",
+        "spark.job.interruptOnCancel",
+    )
+    saved = {p: sc.getLocalProperty(p) for p in props}
     group = f"concurrent-actions-{uuid.uuid4().hex[:8]}"
     sc.setJobGroup(group, description, interruptOnCancel=True)
     try:
@@ -187,11 +203,7 @@ def concurrent_actions(spark, fns, description: str) -> None:
             for f in futs:
                 f.result()
     finally:
-        # clear the group so later jobs on this thread aren't tagged
-        # with (or cancellable via) a finished build's group id
-        for prop in (
-            "spark.jobGroup.id",
-            "spark.job.description",
-            "spark.job.interruptOnCancel",
-        ):
-            sc.setLocalProperty(prop, None)
+        # restore the caller's group, so later jobs on this thread keep
+        # the caller's labels and cancel scope, not this call's
+        for prop, value in saved.items():
+            sc.setLocalProperty(prop, value)

@@ -7,9 +7,8 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from pinecone_datasets_spark.functions.text import ngrams, split_words
 from pinecone_datasets_spark.operators.dsir import (
-    _ngrams,
-    _tokens,
     doc_bucket_counts,
     dsir_log_ratios,
     dsir_resample,
@@ -25,8 +24,10 @@ def docs(spark):
 
 
 def _grams_of(spark, text, n):
-    df = spark.createDataFrame([(text,)], "text string")
-    return df.select(_ngrams(_tokens("text"), n).alias("g")).first().g
+    df = spark.createDataFrame([(text,)], "text string").select(
+        split_words("text", drop_empty=True).alias("w")
+    )
+    return df.select(ngrams("w", n).alias("g")).first().g
 
 
 def test_ngrams_shapes(spark):
@@ -42,8 +43,9 @@ def test_ngrams_shapes(spark):
 def test_doc_bucket_counts_conserves_grams(spark, docs):
     per_doc = doc_bucket_counts(docs, n=2, n_buckets=64)
     total = per_doc.agg(F.sum("cnt")).first()[0]
+    words = split_words("text", drop_empty=True)
     expected = docs.select(
-        F.sum(F.greatest(F.size(_tokens("text")) - 1, F.lit(0)))
+        F.sum(F.greatest(F.size(words) - 1, F.lit(0)))
     ).first()[0]
     assert total == expected
     assert per_doc.where((F.col("bucket") < 0) | (F.col("bucket") >= 64)).count() == 0
@@ -182,6 +184,19 @@ def test_null_text_gets_zero_weight(spark):
          for r in dsir_weights(raw, tgt, n=2, n_buckets=64).collect()}
     assert set(w) == {1, 2, 3}       # NULL-text doc is not dropped
     assert w[2] == 0.0 and w[3] == 0.0
+
+
+def test_weights_widen_raw_docs_by_id(spark):
+    """An under-split raw corpus is widened by hash on id_col, not
+    round-robin (which adds a per-partition sort to stay deterministic
+    under retry); the id-less target side can only go round-robin."""
+    raw = spark.createDataFrame(
+        [(i, f"w{i % 7} w{i % 5} w{i % 3}") for i in range(40)],
+        "doc_id long, text string",
+    ).coalesce(1)
+    w = dsir_weights(raw, raw.select("text"), n=1, n_buckets=64)
+    plan = w._jdf.queryExecution().analyzed().toString()
+    assert "RepartitionByExpression [doc_id" in plan, plan
 
 
 def test_n_guard(spark, docs):

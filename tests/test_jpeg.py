@@ -25,6 +25,10 @@ from pinecone_datasets_spark.operators.media_codecs import (
     probe_bytes,
 )
 
+# numpy 1.x only warns where numpy 2 raises (out-of-bound int stores):
+# a warning here is a decode path that would escape untyped on numpy 2
+pytestmark = pytest.mark.filterwarnings("error::DeprecationWarning")
+
 
 def _smooth_rgb(h: int, w: int, seed: int = 7) -> np.ndarray:
     rng = np.random.default_rng(seed)
@@ -333,6 +337,33 @@ def test_corruption_fuzz_never_uncontrolled(mode):
             assert isinstance(out, np.ndarray) and out.ndim == 3
         except UnsupportedMediaError:
             pass
+
+
+def test_progressive_dc_overflow_is_typed_error():
+    """A DC table whose one code means a 40-bit difference walks the
+    progressive DC predictor past int32. The decoder must refuse the
+    stream with the typed error; storing the value into the int32
+    coefficient array wraps on numpy 1 and raises OverflowError on
+    numpy 2."""
+    import struct as _struct
+
+    def seg(marker: int, payload: bytes) -> bytes:
+        head = bytes([0xFF, marker]) + _struct.pack(">H", len(payload) + 2)
+        return head + payload
+
+    dqt = seg(0xDB, b"\x00" + b"\x01" * 64)
+    # 8x8 gray frame, one component (id 1, 1x1 sampling, quant table 0)
+    sof2 = seg(0xC2, _struct.pack(">BHHB", 8, 8, 8, 1) + b"\x01\x11\x00")
+    # DC table 0: a single 1-bit code "0" for magnitude category 40
+    dht = seg(0xC4, b"\x00" + b"\x01" + b"\x00" * 15 + bytes([40]))
+    # DC first scan (Ss=Se=0, Ah=Al=0) over component 1
+    sos = seg(0xDA, b"\x01\x01\x00\x00\x00\x00")
+    # bits: code "0", then 40 magnitude bits "1" + 39 x "0" (= 2**39),
+    # then 1-padding to the byte boundary
+    scan = bytes([0x40, 0x00, 0x00, 0x00, 0x00, 0x7F])
+    stream = b"\xff\xd8" + dqt + sof2 + dht + sos + scan + b"\xff\xd9"
+    with pytest.raises(UnsupportedMediaError, match="out of range"):
+        decode_jpeg(stream)
 
 
 def test_dc_only_quality100_roundtrip_is_pixel_exact():

@@ -227,10 +227,11 @@ def test_bm25_index_topk_semi_join_path_matches_literal(
     spark, tmp_path, monkeypatch
 ):
     """r11 review: bm25_index_topk's literal term IN list was unbounded
-    (the plan-bloat pathology _MAX_ISIN_LITERALS exists for). It now
-    routes through _filtered_postings; forcing the broadcast-semi-join
+    (the plan-bloat pathology MAX_ISIN_LITERALS exists for). It now
+    routes through isin_or_semi_join; forcing the broadcast-semi-join
     branch must give identical results to the literal branch."""
     from pinecone_datasets_spark.operators import keyword as kw
+    from pinecone_datasets_spark.plans import pushdown
 
     docs = spark.createDataFrame(
         [
@@ -250,7 +251,7 @@ def test_bm25_index_topk_semi_join_path_matches_literal(
         (r.query_id, r.doc_id, r.rank, round(r.score, 9))
         for r in kw.bm25_index_topk(spark, path, queries, k=3).collect()
     }
-    monkeypatch.setattr(kw, "_MAX_ISIN_LITERALS", 1)
+    monkeypatch.setattr(pushdown, "MAX_ISIN_LITERALS", 1)
     semi = {
         (r.query_id, r.doc_id, r.rank, round(r.score, 9))
         for r in kw.bm25_index_topk(spark, path, queries, k=3).collect()

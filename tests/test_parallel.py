@@ -142,8 +142,9 @@ def test_concurrent_actions_runs_all_and_inherits_group(spark):
     """r14: index builds submit their independent writes through
     concurrent_actions — every fn must run, worker threads must inherit
     the caller's job group (plain pool threads would not), and the
-    group property must be cleared afterwards so later jobs on the
-    calling thread aren't tagged with a finished build's group."""
+    group property must be restored afterwards (here: to unset) so
+    later jobs on the calling thread aren't tagged with a finished
+    build's group."""
     import threading
 
     from pinecone_datasets_spark.parallel import concurrent_actions
@@ -172,6 +173,33 @@ def test_concurrent_actions_runs_all_and_inherits_group(spark):
     assert (
         spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
     )
+
+
+def test_concurrent_actions_restores_callers_group(spark):
+    """The caller's job group, description and interrupt flag survive
+    the call, so the caller's UI labels and cancelJobGroup still cover
+    the jobs it runs afterwards."""
+    from pinecone_datasets_spark.parallel import concurrent_actions
+
+    sc = spark.sparkContext
+    props = (
+        "spark.jobGroup.id",
+        "spark.job.description",
+        "spark.job.interruptOnCancel",
+    )
+    sc.setJobGroup("caller-group", "caller labels", interruptOnCancel=False)
+    try:
+        concurrent_actions(
+            spark, [lambda: spark.range(3).count()], "inner build"
+        )
+        assert [sc.getLocalProperty(p) for p in props] == [
+            "caller-group",
+            "caller labels",
+            "false",
+        ]
+    finally:
+        for p in props:
+            sc.setLocalProperty(p, None)
 
 
 def test_concurrent_actions_first_failure_propagates(spark):

@@ -247,3 +247,30 @@ def test_semantic_dedup_bits_none_autosizes(spark):
     # every planted duplicate (id >= 1000) dropped, all originals kept
     assert all(i < 1000 for i in kept_auto)
     assert set(range(300)) == kept_auto
+
+
+def test_pairs_survive_non_integer_shuffle_partitions(spark, monkeypatch):
+    """Some platforms set spark.sql.shuffle.partitions to ``auto``; the
+    pair miner falls back to defaultParallelism instead of failing at
+    plan build, with the same pairs."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    rows = [(i, [float(i % 5), 1.0, float(i % 3)]) for i in range(30)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    def pairs():
+        return sorted(
+            tuple(r)
+            for r in semantic_dedup_pairs(df, dim=3, bits=2).collect()
+        )
+
+    expected = pairs()
+    real_get = RuntimeConfig.get
+
+    def get(self, key, *args, **kwargs):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real_get(self, key, *args, **kwargs)
+
+    monkeypatch.setattr(RuntimeConfig, "get", get)
+    assert pairs() == expected and expected

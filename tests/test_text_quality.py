@@ -372,6 +372,52 @@ def test_line_gates_duckdb_twins(spark):
         assert tuple(row) == tuple(exp), (d, tuple(row), tuple(exp))
 
 
+@pytest.mark.parametrize(
+    "text, n, kept, dropped, positional, distinct",
+    [
+        # trim strips spaces only: a leading newline leaves an empty token
+        ("\nA b", 2, ["", "a", "b"], ["a", "b"], ["a b"], ["a b"]),
+        # a \x0B run is one separator (explicit class, not \s)
+        ("a\x0B\x0Bb c", 2, ["a", "b", "c"], ["a", "b", "c"],
+         ["a b", "b c"], ["a b", "b c"]),
+        ("", 2, [""], [], [], []),
+        (None, 2, None, None, [], []),
+        # mixed case folds; n=1 gives the words, distinct drops repeats
+        ("Hello World hello", 1, ["hello", "world", "hello"],
+         ["hello", "world", "hello"], ["hello", "world", "hello"],
+         ["hello", "world"]),
+        ("Hello World hello", 2, ["hello", "world", "hello"],
+         ["hello", "world", "hello"], ["hello world", "world hello"],
+         ["hello world", "world hello"]),
+        # n above the word count: no grams
+        ("one two", 3, ["one", "two"], ["one", "two"], [], []),
+    ],
+)
+def test_split_words_and_ngrams_edge_cases(
+    spark, text, n, kept, dropped, positional, distinct
+):
+    """Pins the shared tokenizer and n-gram builder on edge inputs: the
+    empty-token policy on both sides, case folding, and the empty gram
+    array for NULL and short inputs that the decontaminate, boilerplate,
+    terms and keyword operators rely on."""
+    from pinecone_datasets_spark.functions.text import ngrams, split_words
+
+    df = spark.createDataFrame([(text,)], "t string").select(
+        split_words("t", drop_empty=False).alias("kept"),
+        split_words("t", drop_empty=True).alias("dropped"),
+    )
+    row = df.select(
+        "kept",
+        "dropped",
+        ngrams("dropped", n).alias("positional"),
+        ngrams("dropped", n, distinct=True).alias("distinct"),
+    ).first()
+    assert row["kept"] == kept
+    assert row["dropped"] == dropped
+    assert row["positional"] == positional
+    assert row["distinct"] == distinct
+
+
 def test_split_sentences_and_ngrams(spark):
     duckdb = pytest.importorskip("duckdb")
     from pinecone_datasets_spark.functions.text import (

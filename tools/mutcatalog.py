@@ -214,8 +214,11 @@ MUTATIONS: list[Mut] = [
         key="q13_text_profile",
         name="wordcount_spaces_only",
         path=TEXT,
-        old="F.split(F.trim(_c(text)), WHITESPACE_RUN_PATTERN),",
-        new='F.split(F.trim(_c(text)), " "),',
+        old="return F.size(split_words(text, drop_empty=True, lower=False))",
+        new=(
+            'return F.size(F.filter(F.split(F.trim(_c(text)), " "),'
+            " lambda w: F.length(w) > 0))"
+        ),
     ),
     Mut(
         key="q13_text_profile",
@@ -258,8 +261,8 @@ MUTATIONS: list[Mut] = [
         key="q15_q16_dedup_exact",
         name="fingerprint_prefix_only",
         path=TEXT,
-        old="    normalized = F.regexp_replace(F.lower(F.trim(_c(text))), WHITESPACE_RUN_PATTERN, \" \")\n    return F.md5(normalized)",
-        new="    normalized = F.regexp_replace(F.lower(F.trim(_c(text))), WHITESPACE_RUN_PATTERN, \" \")\n    return F.md5(F.substring(normalized, 1, 100))",
+        old="    return F.md5(normalized_text(text))",
+        new="    return F.md5(F.substring(normalized_text(text), 1, 100))",
     ),
     Mut(
         key="q15_q16_dedup_exact",
